@@ -8,19 +8,19 @@ hash maps (``closureSubsBySuperclass``, RelationGraph.scala:163); we hold it
 as a distributed DataFrame and iterate the classic semi-naive delta:
 
     delta_0  = edges
-    delta_i  = project(delta_{i-1} join edges) anti-join closure
+    delta_i  = project(delta_{i-1} join closure_{i-1}) anti-join closure_{i-1}
     closure  = union of all deltas
 
 Properties that matter at 100 TB:
 - the per-iteration join shuffles on the single int join key; the small side
-  (the base edge relation, i.e. the told hierarchy) is broadcast when under
-  a threshold — ontology hierarchies are tiny relative to the edge stream;
+  (the accumulated closure of the told hierarchy) is broadcast when under a
+  threshold — ontology hierarchies are tiny relative to the edge stream;
 - ``localCheckpoint`` after every iteration truncates lineage, otherwise the
   logical plan grows linearly with iterations and Catalyst analysis time
   explodes (well-known iterative-Spark pitfall, SURVEY.md section 4.1);
-- iteration count = graph diameter (right-linear recursion), with an
-  optional doubling mode (closure o closure) for long chains: O(log d)
-  iterations at the cost of heavier joins.
+- each delta composes with the ACCUMULATED closure (closure o closure), so
+  reachable path length doubles per round: O(log diameter) iterations
+  instead of one per hop.
 - cycles (e.g. from named-class equivalences) terminate naturally: the
   anti-join makes every delta strictly new.
 """
@@ -138,22 +138,12 @@ def ensure_iteration_confs(df: DataFrame) -> None:
     df.sparkSession.conf.set("spark.sql.constraintPropagation.enabled", "false")
 
 
-def _maybe_broadcast(df: DataFrame, threshold: int) -> DataFrame:
-    """Broadcast `df` if its row count is below threshold (count is cached)."""
-    if threshold <= 0:
-        return df
-    if df.count() <= threshold:
-        return F.broadcast(df)
-    return df
-
-
 def transitive_closure(
     edges: DataFrame,
     child: str = "child",
     parent: str = "parent",
     max_iterations: int = 200,
     broadcast_row_threshold: int = 5_000_000,
-    mode: str = "smart",
     group_cols: list[str] | None = None,
 ) -> DataFrame:
     """Non-reflexive transitive closure of an edge DataFrame.
@@ -167,14 +157,11 @@ def transitive_closure(
     group value — computed for ALL groups in one distributed job: the join
     key is simply (group..., node), no per-window driver loop).
 
-    mode='smart' (default): each round composes the delta with the FULL
-    accumulated closure, so reachable path length doubles per round —
-    O(log diameter) rounds. Right for Spark, where per-round fixed cost
-    (shuffle + checkpoint + scheduling) dominates: a depth-40 chain closes
-    in ~6 rounds instead of 40.
-    mode='linear': classic right-linear semi-naive (delta composed with the
-    base edges) — fewer duplicate derivations per round; preferable when the
-    closure dwarfs memory and rounds are cheap relative to join width.
+    Each round composes the delta with the FULL accumulated closure, so
+    reachable path length doubles per round — O(log diameter) rounds. Right
+    for Spark, where per-round fixed cost (shuffle + checkpoint +
+    scheduling) dominates: a depth-40 chain closes in ~6 rounds instead of
+    40.
     """
     ensure_iteration_confs(edges)
     groups = list(group_cols or [])
@@ -185,18 +172,12 @@ def transitive_closure(
         out = _driver_tc(base, child, parent, max_iterations)
         if out is not None:
             return out
-    linear_side = (
-        _maybe_broadcast(base, broadcast_row_threshold) if mode == "linear" else None
-    )
 
     closure = base
     delta = base
     for _ in range(max_iterations):
         small = total_rows <= broadcast_row_threshold
-        if mode == "smart":
-            join_side = F.broadcast(closure) if small else closure
-        else:
-            join_side = linear_side
+        join_side = F.broadcast(closure) if small else closure
         cond = F.col(f"d.{parent}") == F.col(f"e.{child}")
         for g in groups:
             cond = cond & (F.col(f"d.{g}") == F.col(f"e.{g}"))
@@ -356,6 +337,39 @@ def reflexive(nodes: DataFrame, node_col: str, child: str, parent: str) -> DataF
     ).dropDuplicates()
 
 
+def star_union(
+    tc: DataFrame,
+    nodes: DataFrame,
+    node_col: str,
+    child: str = "child",
+    parent: str = "parent",
+    top: int | None = None,
+) -> DataFrame:
+    """tc ∪ {(x, x) : x in nodes} ∪ {(x, top) : x in nodes, x != top}, the
+    star of a closed relation, built as a DISJOINT union instead of a
+    deduplicated one.
+
+    tc overlaps the reflexive rows only on cycle self-pairs and the top rows
+    only on told (x, top) pairs — both vocabulary-rare, so each is
+    broadcast-anti-joined away — and the reflexive and top rows overlap
+    each other only at (top, top), excluded from the top side. Same set as
+    a dropDuplicates of the three, without the O(closure) exchange."""
+    refl = reflexive(nodes, node_col, child, parent)
+    self_pairs = tc.where(F.col(child) == F.col(parent))
+    star = tc.unionByName(
+        refl.join(F.broadcast(self_pairs), on=[child, parent], how="left_anti")
+    )
+    if top is None:
+        return star
+    tops = nodes.where(F.col(node_col) != top).select(
+        F.col(node_col).alias(child), F.lit(top).cast("int").alias(parent)
+    )
+    top_pairs = tc.where((F.col(parent) == top) & (F.col(child) != top))
+    return star.unionByName(
+        tops.join(F.broadcast(top_pairs), on=[child, parent], how="left_anti")
+    )
+
+
 def reflexive_transitive_closure(
     edges: DataFrame,
     nodes: DataFrame,
@@ -364,16 +378,6 @@ def reflexive_transitive_closure(
     parent: str = "parent",
     **kwargs,
 ) -> DataFrame:
-    """tc(edges) union {(x,x) : x in nodes}.
-
-    The two components only overlap on CYCLE nodes (tc contains (x,x) iff x
-    lies on a cycle — vocabulary-rare), so instead of an O(closure)
-    dropDuplicates shuffle the reflexive side is broadcast-anti-joined
-    against tc's self-pairs and unioned disjoint (same set, one less
-    closure-sized exchange)."""
+    """tc(edges) union {(x,x) : x in nodes}, unioned disjoint (star_union)."""
     tc = transitive_closure(edges, child=child, parent=parent, **kwargs)
-    refl = reflexive(nodes, node_col, child, parent)
-    self_pairs = tc.where(F.col(child) == F.col(parent))
-    return tc.unionByName(
-        refl.join(F.broadcast(self_pairs), on=[child, parent], how="left_anti")
-    )
+    return star_union(tc, nodes, node_col, child, parent)

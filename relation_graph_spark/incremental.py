@@ -51,14 +51,31 @@ from pyspark.sql import DataFrame, SparkSession
 from relation_graph_spark import tokens as T
 from relation_graph_spark.closure import (
     FixpointDidNotConverge,
+    incremental_tc,
     reflexive,
-    transitive_closure,
+    star_union,
 )
 from relation_graph_spark.config import RGConfig
 from relation_graph_spark.materialize import (
-    _bcast_if_small,
+    _INCREMENTAL_FEEDBACK_THRESHOLD,
+    _match_class,
+    _spo,
+    cycle_pairs,
     derive_relations,
+    derive_star_delta,
+    existential_rows,
+    feedback_round,
+    fire_definitions,
+    individual_rows,
     materialize_edges,
+    new_star_pairs,
+    property_star,
+    reflexive_rows,
+    scan_max_token,
+    star_delta_stats,
+    taxonomy_pairs,
+    taxonomy_rows,
+    type_rows,
 )
 
 # persisted state frames (everything else derives cheaply on load)
@@ -171,22 +188,6 @@ def _prune_evidence(rel_paths: list[str], touched: list[int]) -> dict:
     }
 
 
-def _sc_star_of(sc_tc: DataFrame, classes: DataFrame) -> DataFrame:
-    # disjoint-union construction (no O(closure) dedup) — see
-    # materialize._sc_star for the overlap argument
-    refl = reflexive(classes, "c", "sub", "sup")
-    top = classes.where(F.col("c") != T.TOP).select(
-        F.col("c").alias("sub"), F.lit(T.TOP).cast("int").alias("sup")
-    )
-    self_pairs = sc_tc.where(F.col("sub") == F.col("sup"))
-    top_pairs = sc_tc.where((F.col("sup") == T.TOP) & (F.col("sub") != T.TOP))
-    return sc_tc.unionByName(
-        refl.join(F.broadcast(self_pairs), on=["sub", "sup"], how="left_anti")
-    ).unionByName(
-        top.join(F.broadcast(top_pairs), on=["sub", "sup"], how="left_anti")
-    )
-
-
 def initial_state(told: dict[str, DataFrame], cfg: RGConfig) -> dict[str, DataFrame]:
     m = materialize_edges(told, cfg)
     return {
@@ -213,22 +214,11 @@ def _ensure_derived(state: dict[str, DataFrame], cfg: RGConfig) -> None:
     restart or a state produced before these keys existed). One-time
     O(closure) cost per process, not per batch."""
     if "_sc_star" not in state:
-        state["_sc_star"] = _sc_star_of(
-            state["sc_tc"], state["classes"]
+        state["_sc_star"] = star_union(
+            state["sc_tc"], state["classes"], "c", "sub", "sup", top=T.TOP
         ).localCheckpoint(eager=False)
     if "_sp_star" not in state:
-        state["_sp_star"] = (
-            transitive_closure(
-                state["sp"],
-                child="sub",
-                parent="sup",
-                max_iterations=cfg.max_iterations,
-                broadcast_row_threshold=cfg.broadcast_row_threshold,
-            )
-            .unionByName(reflexive(state["props"], "p", "sub", "sup"))
-            .dropDuplicates()
-            .localCheckpoint(eager=False)
-        )
+        state["_sp_star"] = property_star(state["sp"], state["props"], cfg)
     if "_n_sc_star" not in state:
         state["_n_sc_star"] = state["_sc_star"].count()
     if "_n_sp_star" not in state:
@@ -238,21 +228,8 @@ def _ensure_derived(state: dict[str, DataFrame], cfg: RGConfig) -> None:
     if "_n_def" not in state:
         state["_n_def"] = state["def_some"].count()
     if "_max_token" not in state:
-        state["_max_token"] = (
-            state["_sc_star"]
-            .select(F.greatest(F.max("sub"), F.max("sup")).alias("m"))
-            .unionByName(
-                state["_sp_star"].select(
-                    F.greatest(F.max("sub"), F.max("sup")).alias("m")
-                )
-            )
-            .unionByName(
-                state["some"].select(
-                    F.greatest(F.max("s"), F.max("p"), F.max("f")).alias("m")
-                )
-            )
-            .agg(F.max("m"))
-            .collect()[0][0]
+        state["_max_token"] = scan_max_token(
+            state["_sc_star"], state["_sp_star"], state["some"]
         )
 
 
@@ -270,7 +247,9 @@ def output_frames(state: dict[str, DataFrame], cfg: RGConfig) -> dict[str, DataF
 
     sc_star = state.get("_sc_star")
     if sc_star is None:
-        sc_star = _sc_star_of(state["sc_tc"], state["classes"])
+        sc_star = star_union(
+            state["sc_tc"], state["classes"], "c", "sub", "sup", top=T.TOP
+        )
     if state.get("_has_bot") is False:
         unsat = sc_star.where(F.lit(False)).select(F.col("sub").alias("c"))
     else:
@@ -283,27 +262,6 @@ def output_frames(state: dict[str, DataFrame], cfg: RGConfig) -> dict[str, DataF
         "classes": state["classes"],
         "assertions": state["assertions"],
     }
-
-
-def incremental_tc(
-    old_tc: DataFrame,
-    delta_edges: DataFrame,
-    cfg: RGConfig,
-    old_tc_rows: int | None = None,
-) -> tuple[DataFrame, DataFrame]:
-    """cfg-shaped wrapper over closure.incremental_tc (shared with the R4
-    feedback loop in materialize_edges). `old_tc_rows` (or an upper bound,
-    e.g. the running _n_sc_star stat) enables the driver fast path and the
-    count-free broadcast decision."""
-    from relation_graph_spark.closure import incremental_tc as _itc
-
-    return _itc(
-        old_tc,
-        delta_edges,
-        max_iterations=cfg.max_iterations,
-        broadcast_row_threshold=cfg.broadcast_row_threshold,
-        old_tc_rows=old_tc_rows,
-    )
 
 
 def _anti_join_rel_history(
@@ -357,17 +315,6 @@ def apply_delta(
     feedback (AX_EQUIV_SOME) stays on this delta-sized path: R4 rounds run
     incrementally after the monotone fold (see module doc).
     """
-    import time as _time
-
-    _pt = bool(os.environ.get("RGS_PHASE_TIMING"))
-    _t0 = [_time.time()]
-
-    def _mk(label: str) -> None:
-        if _pt:
-            now = _time.time()
-            print(f"  [apply_delta] {label}: {now - _t0[0]:.2f}s")
-            _t0[0] = now
-
     # ------- monotone fold (everything except R4 feedback) --------------
     #
     # Every `X_new` below is a DISJOINT union: the delta is deduplicated at
@@ -440,13 +387,15 @@ def apply_delta(
     d_max = max(
         (m for _n, m in stats.values() if m is not None), default=None
     )
-    _mk("told anti-joins + stats")
     # _n_sc_star (tc + reflexive + top rows) upper-bounds |sc_tc|: a valid
     # hint for the driver fast path / broadcast decision in incremental_tc
     sc_tc_new, d_tc = incremental_tc(
-        state["sc_tc"], d_sc, cfg, old_tc_rows=state["_n_sc_star"]
+        state["sc_tc"],
+        d_sc,
+        max_iterations=cfg.max_iterations,
+        broadcast_row_threshold=cfg.broadcast_row_threshold,
+        old_tc_rows=state["_n_sc_star"],
     )
-    _mk("incremental_tc")
 
     sp_new = state["sp"].unionByName(d_sp)
     sp_changed = stats["sp"][0] > 0
@@ -454,18 +403,7 @@ def apply_delta(
     if sp_changed:
         # property edges arrived: re-close the (tiny, vocabulary-sized)
         # property hierarchy
-        sp_star_new = (
-            transitive_closure(
-                sp_new,
-                child="sub",
-                parent="sup",
-                max_iterations=cfg.max_iterations,
-                broadcast_row_threshold=cfg.broadcast_row_threshold,
-            )
-            .unionByName(reflexive(props_new, "p", "sub", "sup"))
-            .dropDuplicates()
-            .localCheckpoint(eager=False)
-        )
+        sp_star_new = property_star(sp_new, props_new, cfg)
         n_sp_star = sp_star_new.count()
         d_sp_star = sp_star_new  # full rewrite; store dedups on load
     elif props_changed:
@@ -488,7 +426,7 @@ def apply_delta(
     # rows of whichever batch introduced the class), so sc_star extends by
     # plain union, no O(closure) dedup.
     d_star = (
-        d_tc.where((F.col("sub") != F.col("sup")) & (F.col("sup") != T.TOP))
+        new_star_pairs(d_tc)
         .unionByName(reflexive(d_classes.where(F.col("c") != T.TOP), "c", "sub", "sup"))
         .unionByName(
             d_classes.select(
@@ -497,14 +435,7 @@ def apply_delta(
         )
         .localCheckpoint(eager=False)
     )
-    # one job: delta-closure size + owl:Nothing detection (feeds _has_bot)
-    _dr = d_star.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(F.when(F.col("sup") == T.BOT, 1).otherwise(0)).alias("bot"),
-    ).collect()[0]
-    n_d_star = _dr["n"]
-    bot_new = int(_dr["bot"] or 0)
-    _mk("sp/some/d_star fold")
+    n_d_star, bot_new = star_delta_stats(d_star)
     sc_star_new = state["_sc_star"].unionByName(d_star).localCheckpoint(eager=False)
 
     thr = cfg.broadcast_row_threshold
@@ -522,17 +453,14 @@ def apply_delta(
         "max_token": max_tok or (1 << 40),
         # fused R3 below the crossover: at delta scale the staged plan's
         # intermediate dedups + checkpoints cost more jobs than they save
-        "staged": n_some > cfg.incremental_feedback_threshold,
+        "staged": n_some > _INCREMENTAL_FEEDBACK_THRESHOLD,
     }
 
     passes = []
     if n_d_star > 0:
         # >=1 new subject-closure pair / >=1 new filler-closure pair
         passes.append(
-            derive_relations(sc_star_new, some_new, sp_star_new, thr, subject_star=d_star, **kw)
-        )
-        passes.append(
-            derive_relations(sc_star_new, some_new, sp_star_new, thr, filler_star=d_star, **kw)
+            derive_star_delta(sc_star_new, some_new, sp_star_new, d_star, thr, **kw)
         )
     if n_d_some > 0:
         # >=1 new told existential
@@ -546,19 +474,18 @@ def apply_delta(
     rel_delta = passes[0]
     for p in passes[1:]:
         rel_delta = rel_delta.unionByName(p)
-    _mk("stats+derive plan")
     rel_paths: list[str] | None = state.get("_rel_paths")  # type: ignore[assignment]
     rel_delta = _anti_join_rel_history(rel_delta, state, rel_paths)
-    _mk("rel history anti-join")
 
     # ------- R4 equivalence feedback, delta-sized -----------------------
     # sc facts derived from rel x def_some re-enter R1/R3 (reference
-    # RelationGraph.scala:217-230; the batch engine's incremental feedback
-    # rounds, materialize.py). Candidates come from the batch's NEW rel rows
-    # against all definitions, plus — only when a NEW definition arrived —
-    # one broadcast-join scan of the accumulated rel to activate it against
-    # history. Each round: new sc facts -> incremental TC -> delta-restricted
-    # R3 -> new rel rows -> new candidates, until dry.
+    # RelationGraph.scala:217-230). Candidates come from the batch's NEW rel
+    # rows against all definitions, plus — only when a NEW definition
+    # arrived — one broadcast-join scan of the accumulated rel to activate
+    # it against history. Each round is materialize.feedback_round (the
+    # batch engine's round step: new sc facts -> incremental TC ->
+    # delta-restricted R3); its rel rows are then deduplicated against
+    # history, since every round's rel delta is emitted exactly.
     def_new = state["def_some"].unionByName(d_def)
     n_def = state["_n_def"] + n_d_def
     d_sc_feedback = d_sc.where(F.lit(False))
@@ -567,31 +494,12 @@ def apply_delta(
     n_star_total = n_d_star
     if n_def > 0:
         def_b = F.broadcast(def_new.dropDuplicates())
-
-        def _fire(rel_rows: DataFrame, defs) -> DataFrame:
-            # x subClassOf F whenever x satisfies F's definition (p some y);
-            # int casts pin the token dtype so feedback-derived sc facts
-            # never widen the persisted sc/sc_tc frames
-            return (
-                rel_rows.alias("r")
-                .join(
-                    defs.alias("d"),
-                    (F.col("r.p") == F.col("d.p")) & (F.col("r.o") == F.col("d.o")),
-                )
-                .select(
-                    F.col("r.s").cast("int").alias("sub"),
-                    F.col("d.f").cast("int").alias("sup"),
-                )
-                .where(F.col("sub") != F.col("sup"))
-                .dropDuplicates()
-            )
-
-        cand = _fire(rel_delta, def_b)
+        cand = fire_definitions(rel_delta, def_b)
         if n_d_def > 0:
             # late definition: one-time activation against committed history
             # (broadcast join over the bucketed rel scan — no shuffle)
             cand = cand.unionByName(
-                _fire(state["rel"], F.broadcast(d_def))
+                fire_definitions(state["rel"], F.broadcast(d_def))
             ).dropDuplicates()
         for _round in range(cfg.max_iterations):
             new_sc_r = cand.join(
@@ -600,52 +508,36 @@ def apply_delta(
             if new_sc_r.isEmpty():
                 break
             d_sc_feedback = d_sc_feedback.unionByName(new_sc_r)
-            sc_new = sc_new.unionByName(new_sc_r)
-            sc_tc_new, d_tc_r = incremental_tc(
-                sc_tc_new,
+            r = feedback_round(
                 new_sc_r,
+                sc_new,
+                sc_tc_new,
+                sc_star_new,
+                some_new,
+                sp_star_new,
                 cfg,
+                kw,
                 old_tc_rows=state["_n_sc_star"] + n_star_total,
+                n_sides=n_sides,
             )
-            d_tc_all = d_tc_all.unionByName(d_tc_r).localCheckpoint(eager=False)
-            # classes are fixed during feedback, so the closure delta minus
-            # self/TOP pairs is disjoint from sc_star — plain union
-            d_star_r = d_tc_r.where(
-                (F.col("sub") != F.col("sup")) & (F.col("sup") != T.TOP)
-            ).localCheckpoint(eager=False)
-            _drr = d_star_r.agg(
-                F.count(F.lit(1)).alias("n"),
-                F.sum(F.when(F.col("sup") == T.BOT, 1).otherwise(0)).alias("bot"),
-            ).collect()[0]
-            n_star_r = _drr["n"]
-            if n_star_r == 0:
+            sc_new, sc_tc_new, sc_star_new = r.sc, r.sc_tc, r.sc_star
+            d_tc_all = d_tc_all.unionByName(r.d_tc).localCheckpoint(eager=False)
+            if r.rel_d is None:
                 break  # facts were already entailed; no new rel can arise
-            bot_new += int(_drr["bot"] or 0)
-            n_star_total += n_star_r
-            n_sides += n_star_r
-            kw["sides_broadcast"] = thr > 0 and n_sides <= thr
-            sc_star_new = sc_star_new.unionByName(d_star_r).localCheckpoint(
-                eager=False
-            )
-            d_star_all = d_star_all.unionByName(d_star_r)
-            rel_r = derive_relations(
-                sc_star_new, some_new, sp_star_new, thr, subject_star=d_star_r, **kw
-            ).unionByName(
-                derive_relations(
-                    sc_star_new, some_new, sp_star_new, thr, filler_star=d_star_r, **kw
-                )
-            )
-            rel_r = _anti_join_rel_history(rel_r, state, rel_paths).join(
+            bot_new += r.n_bot
+            n_star_total += r.n_star
+            n_sides += r.n_star
+            d_star_all = d_star_all.unionByName(r.d_star)
+            rel_r = _anti_join_rel_history(r.rel_d, state, rel_paths).join(
                 rel_delta, on=["s", "p", "o"], how="left_anti"
             ).localCheckpoint(eager=False)
             rel_delta = rel_delta.unionByName(rel_r)
-            cand = _fire(rel_r, def_b)
+            cand = fire_definitions(rel_r, def_b)
         else:
             raise FixpointDidNotConverge(
                 f"streaming R4 feedback did not converge in {cfg.max_iterations} rounds"
             )
 
-    _mk("R4 feedback")
     rel_new = state["rel"].unionByName(rel_delta)
 
     d_assertions = (
@@ -739,8 +631,6 @@ def assemble_delta(
     assemble_output), and suppression is total per object class, so
     tombstoning remains sound under multiple derivations.
     """
-    from relation_graph_spark.materialize import _not_builtin
-
     frames = output_frames(state_new, cfg)
     if state_new.get("_has_bot") is False:
         # no (x, owl:Nothing) pair has ever entered the closure: unsat is a
@@ -754,141 +644,53 @@ def assemble_delta(
         unsat_new = frames["unsat"].localCheckpoint(eager=False)
         unsat_delta = unsat_new.join(prev_unsat, on="c", how="left_anti").localCheckpoint(eager=False)
         grew_unsat = not unsat_delta.isEmpty()
-    unsat_b = F.broadcast(unsat_new)
-    ud_b = F.broadcast(unsat_delta)
-
-    def _spo(df, s, p_lit, o):
-        return df.select(
-            F.col(s).cast("int").alias("s"),
-            F.lit(p_lit).cast("int").alias("p"),
-            F.col(o).cast("int").alias("o"),
-        )
-
-    def _prop_filter(df):
-        if cfg.properties is None:
-            return df
-        return df.where(
-            F.col("p").isin(*[int(t) for t in cfg.properties])
-            if cfg.properties
-            else F.lit(False)
-        )
 
     spark = state_new["rel"].sparkSession
     empty = spark.createDataFrame([], "s int, p int, o int")
     new_rows, retracted = empty, empty
 
     # ---- existential rows -------------------------------------------------
-    def _rel_rows(rel_df):
-        out = rel_df.where(_not_builtin("s") & _not_builtin("o") & _not_builtin("p"))
-        out = out.join(unsat_b, out["o"] == unsat_b["c"], "left_anti")
-        return _prop_filter(out).select(
-            F.col("s").cast("int").alias("s"),
-            F.col("p").cast("int").alias("p"),
-            F.col("o").cast("int").alias("o"),
-        )
-
+    rel_rows = existential_rows(deltas["rel"], cfg, unsat_new)
+    if grew_unsat:
+        # previously-emitted existential rows whose object turned unsat
+        old_rel = state_new["rel"].join(deltas["rel"], on=["s", "p", "o"], how="left_anti")
+        bad_rel = _match_class(existential_rows(old_rel, cfg), "o", unsat_delta, "left_semi")
     if cfg.output_classes:
-        new_rows = new_rows.unionByName(_rel_rows(deltas["rel"]))
+        new_rows = new_rows.unionByName(rel_rows)
         if grew_unsat:
-            # previously-emitted existential rows whose object turned unsat
-            old_rel = state_new["rel"].join(deltas["rel"], on=["s", "p", "o"], how="left_anti")
-            bad = old_rel.join(ud_b, old_rel["o"] == ud_b["c"], "left_semi")
-            bad = _prop_filter(
-                bad.where(_not_builtin("s") & _not_builtin("o") & _not_builtin("p"))
-            )
-            retracted = retracted.unionByName(
-                bad.select(
-                    F.col("s").cast("int"), F.col("p").cast("int"), F.col("o").cast("int")
-                )
-            )
+            retracted = retracted.unionByName(bad_rel)
 
     # ---- individual existential rows ---------------------------------------
-    # ind : C and C subClassOf (p some O)  =>  ind p O (assemble_output's
-    # `ind` family). New pairs come from (new assertions x all valid rel) and
-    # (all assertions x new valid rel); the union can re-derive an
+    # New pairs come from (new assertions x all valid rel) and (all
+    # assertions x new valid rel); the union can re-derive an
     # already-committed row through a second class, so needs_dedup=True.
     needs_dedup = False
     if cfg.output_individuals:
         needs_dedup = True
         a_all = state_new["assertions"]
         d_a = deltas["assertions"]
-
-        def _ind_from(assertions, rel_rows):
-            return (
-                assertions.alias("a")
-                .join(rel_rows.alias("r"), F.col("a.c") == F.col("r.s"))
-                .select(
-                    F.col("a.ind").cast("int").alias("s"),
-                    F.col("r.p").cast("int").alias("p"),
-                    F.col("r.o").cast("int").alias("o"),
-                )
-            )
-
-        ind_exist = _ind_from(a_all, _rel_rows(deltas["rel"]))
-        if not d_a.isEmpty():
+        new_assertions = not d_a.isEmpty()
+        ind_exist = individual_rows(a_all, rel_rows)
+        if new_assertions:
             ind_exist = ind_exist.unionByName(
-                _ind_from(d_a, _rel_rows(state_new["rel"]))
+                individual_rows(d_a, existential_rows(state_new["rel"], cfg, unsat_new))
             )
         new_rows = new_rows.unionByName(ind_exist.dropDuplicates())
         if grew_unsat:
             # individual rows whose underlying rel row was suppressed —
             # suppression is per-object, so EVERY derivation of the row dies
             # with it and the tombstone is total
-            old_rel = state_new["rel"].join(
-                deltas["rel"], on=["s", "p", "o"], how="left_anti"
-            )
-            bad_i = old_rel.join(ud_b, old_rel["o"] == ud_b["c"], "left_semi")
-            bad_i = _prop_filter(
-                bad_i.where(_not_builtin("s") & _not_builtin("o") & _not_builtin("p"))
-            )
             retracted = retracted.unionByName(
-                _ind_from(a_all, bad_i).dropDuplicates()
+                individual_rows(a_all, bad_rel).dropDuplicates()
             )
 
     # ---- taxonomy rows ------------------------------------------------------
     if cfg.output_subclasses:
-        def _taxo_base(df):
-            out = df.where(
-                _not_builtin("sub") & _not_builtin("sup") & (F.col("sub") != F.col("sup"))
-            )
-            return out.join(unsat_b, out["sup"] == unsat_b["c"], "left_anti")
-
-        scc_delta = _taxo_base(deltas["sc_tc"]).localCheckpoint(eager=False)
-        if cfg.equivalence_as_subclass:
-            new_rows = new_rows.unionByName(_spo(scc_delta, "sub", T.SUBCLASSOF, "sup"))
-        else:
-            # mutual pairs only exist between CYCLE nodes (nodes whose
-            # self-pair is in the closure — same restriction as
-            # assemble_output): reduce the closure to that vocabulary-rare
-            # set with broadcast semi-joins before any pair matching, so no
-            # O(closure) shuffle happens per batch
-            cyc = F.broadcast(
-                state_new["sc_tc"]
-                .where(F.col("sub") == F.col("sup"))
-                .select(F.col("sub").alias("cyc_c"))
-                .dropDuplicates()
-            )
-            tc_cyc = (
-                state_new["sc_tc"]
-                .where(
-                    _not_builtin("sub")
-                    & _not_builtin("sup")
-                    & (F.col("sub") != F.col("sup"))
-                )
-                .join(cyc, F.col("sub") == F.col("cyc_c"), "left_semi")
-                .join(cyc, F.col("sup") == F.col("cyc_c"), "left_semi")
-                .localCheckpoint(eager=False)
-            )
-            rev_cyc = F.broadcast(
-                tc_cyc.select(F.col("sup").alias("sub"), F.col("sub").alias("sup"))
-            )
-            # delta pairs: mutual ones emit as EQUIVALENTCLASS
-            d_mutual = scc_delta.join(rev_cyc, on=["sub", "sup"], how="left_semi")
-            d_plain = scc_delta.join(rev_cyc, on=["sub", "sup"], how="left_anti")
-            new_rows = new_rows.unionByName(_spo(d_plain, "sub", T.SUBCLASSOF, "sup"))
-            new_rows = new_rows.unionByName(
-                _spo(d_mutual, "sub", T.EQUIVALENTCLASS, "sup")
-            )
+        scc_delta = taxonomy_pairs(deltas["sc_tc"], unsat_new).localCheckpoint(eager=False)
+        tc_cyc = None if cfg.equivalence_as_subclass else cycle_pairs(state_new["sc_tc"])
+        # delta pairs: mutual ones emit as EQUIVALENTCLASS
+        new_rows = new_rows.unionByName(taxonomy_rows(scc_delta, tc_cyc))
+        if tc_cyc is not None:
             # reverse activation: an OLD pair whose reverse just arrived was
             # emitted as subClassOf and is now an equivalence -> emit the EQ
             # row, tombstone the SUB row. Activated pairs are mutual, hence
@@ -897,8 +699,9 @@ def assemble_delta(
                 F.col("sup").alias("sub"), F.col("sub").alias("sup")
             )
             activated = (
-                _taxo_base(
-                    tc_cyc.join(deltas["sc_tc"], on=["sub", "sup"], how="left_anti")
+                taxonomy_pairs(
+                    tc_cyc.join(deltas["sc_tc"], on=["sub", "sup"], how="left_anti"),
+                    unsat_new,
                 )
                 .join(rev_delta, on=["sub", "sup"], how="left_semi")
                 .localCheckpoint(eager=False)
@@ -910,88 +713,45 @@ def assemble_delta(
                 _spo(activated, "sub", T.SUBCLASSOF, "sup")
             )
         if grew_unsat:
-            # previously-emitted taxonomy rows whose sup turned unsat
+            # previously-emitted taxonomy rows whose sup turned unsat, under
+            # whichever predicate they were emitted: a previously-mutual pair
+            # lives inside the cycle-restricted closure before this batch
             old_tc = state_new["sc_tc"].join(
                 deltas["sc_tc"], on=["sub", "sup"], how="left_anti"
             )
-            bad_tc = (
-                old_tc.where(
-                    _not_builtin("sub")
-                    & _not_builtin("sup")
-                    & (F.col("sub") != F.col("sup"))
-                )
-                .join(ud_b, old_tc["sup"] == ud_b["c"], "left_semi")
-                .localCheckpoint(eager=False)
+            bad_tc = _match_class(
+                taxonomy_pairs(old_tc), "sup", unsat_delta, "left_semi"
+            ).localCheckpoint(eager=False)
+            tc_prev = (
+                None
+                if tc_cyc is None
+                else tc_cyc.join(deltas["sc_tc"], on=["sub", "sup"], how="left_anti")
             )
-            if cfg.equivalence_as_subclass:
-                retracted = retracted.unionByName(
-                    _spo(bad_tc, "sub", T.SUBCLASSOF, "sup")
-                )
-            else:
-                # retract whichever predicate the row was emitted under; a
-                # previously-mutual pair lives inside the cycle-restricted
-                # closure (tc_cyc from the emission branch above)
-                tc_prev = tc_cyc.join(
-                    deltas["sc_tc"], on=["sub", "sup"], how="left_anti"
-                )
-                bad_mut = bad_tc.join(
-                    F.broadcast(
-                        tc_prev.select(
-                            F.col("sup").alias("sub"), F.col("sub").alias("sup")
-                        )
-                    ),
-                    on=["sub", "sup"],
-                    how="left_semi",
-                )
-                bad_plain = bad_tc.join(bad_mut, on=["sub", "sup"], how="left_anti")
-                retracted = retracted.unionByName(
-                    _spo(bad_plain, "sub", T.SUBCLASSOF, "sup")
-                ).unionByName(_spo(bad_mut, "sub", T.EQUIVALENTCLASS, "sup"))
+            retracted = retracted.unionByName(taxonomy_rows(bad_tc, tc_prev))
         if cfg.reflexive_subclasses:
-            refl_pred = (
-                T.SUBCLASSOF if cfg.equivalence_as_subclass else T.EQUIVALENTCLASS
+            new_rows = new_rows.unionByName(
+                reflexive_rows(deltas["classes"], cfg, unsat_new)
             )
-            d_refl = (
-                deltas["classes"]
-                .where(_not_builtin("c"))
-                .join(unsat_b, on="c", how="left_anti")
-            )
-            new_rows = new_rows.unionByName(_spo(d_refl, "c", refl_pred, "c"))
             if grew_unsat:
                 old_classes = state_new["classes"].join(
                     deltas["classes"], on="c", how="left_anti"
                 )
-                dead_refl = old_classes.join(ud_b, on="c", how="left_semi")
-                retracted = retracted.unionByName(_spo(dead_refl, "c", refl_pred, "c"))
+                retracted = retracted.unionByName(
+                    _match_class(reflexive_rows(old_classes, cfg), "s", unsat_delta, "left_semi")
+                )
         if cfg.output_individuals:
-            # ind : C and C subClassOf* O => ind rdf:type O. Mirrors
-            # assemble_output's ityped family: NOT unsat-gated, builtin
-            # objects excluded. New pairs: (new assertions x full sc_star)
-            # union (all assertions x closure delta incl. reflexive pairs of
-            # new classes); may re-derive committed rows -> needs_dedup.
-            a_all = state_new["assertions"]
-            d_a = deltas["assertions"]
+            # rdf:type rows (not unsat-gated). New pairs: (new assertions x
+            # full sc_star) union (all assertions x closure delta incl.
+            # reflexive pairs of new classes); may re-derive committed rows
+            # -> needs_dedup.
             d_star_t = deltas["sc_tc"].unionByName(
                 deltas["classes"].select(
                     F.col("c").alias("sub"), F.col("c").alias("sup")
                 )
             )
-
-            def _ityped_from(assertions, pairs):
-                return (
-                    assertions.alias("a")
-                    .join(pairs.alias("h"), F.col("a.c") == F.col("h.sub"))
-                    .where(_not_builtin("h.sup"))
-                    .select(
-                        F.col("a.ind").cast("int").alias("s"),
-                        F.lit(T.RDF_TYPE).cast("int").alias("p"),
-                        F.col("h.sup").cast("int").alias("o"),
-                    )
-                )
-
-            ityped = _ityped_from(a_all, d_star_t)
-            if not d_a.isEmpty():
-                ityped = ityped.unionByName(_ityped_from(d_a, frames["sc_star"]))
+            ityped = type_rows(a_all, d_star_t)
+            if new_assertions:
+                ityped = ityped.unionByName(type_rows(d_a, frames["sc_star"]))
             new_rows = new_rows.unionByName(ityped.dropDuplicates())
 
     return new_rows, retracted, unsat_new, needs_dedup

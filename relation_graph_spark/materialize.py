@@ -31,23 +31,30 @@ Physical shape (the 100-TB story):
 
 from __future__ import annotations
 
+from typing import NamedTuple
+
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
 from relation_graph_spark import tokens as T
 from relation_graph_spark.closure import (
     FixpointDidNotConverge,
+    ensure_iteration_confs,
+    incremental_tc,
     reflexive,
+    star_union,
     transitive_closure,
 )
 from relation_graph_spark.config import OutputMode, RGConfig
 from relation_graph_spark.decode import decode_axioms, told_tables
 
-
-def _bcast_if_small(df: DataFrame, threshold: int) -> DataFrame:
-    if threshold > 0 and df.count() <= threshold:
-        return F.broadcast(df)
-    return df
+# Cost crossover on the told-existential row count. Above it R3 runs STAGED
+# (see derive_relations) and R4 feedback rounds run incrementally
+# (feedback_round: incremental_tc + delta-restricted R3); at or below it the
+# handful of extra per-round / per-stage Spark jobs costs more than the data
+# they save, so small ontologies take the fused plan and full-recompute
+# rounds (same cost-based shape as broadcast_row_threshold).
+_INCREMENTAL_FEEDBACK_THRESHOLD = 20_000
 
 
 # token-packing width: 3 tokens fit one int64 when every token < 2^21 (~2M
@@ -91,12 +98,9 @@ def _distinct3(df: DataFrame, c1: str, c2: str, c3: str, packable: bool) -> Data
 def _sc_star(sc: DataFrame, classes: DataFrame, cfg: RGConfig):
     """(transitive closure, reflexive-transitive closure + implicit (c, TOP)).
 
-    The star union is built DISJOINT instead of deduplicated: tc overlaps
-    the reflexive rows only on cycle self-pairs and the top rows only on
-    told (x, TOP) pairs — both vocabulary-rare, broadcast-anti-joined away —
-    and refl/top overlap each other only at (TOP, TOP), excluded from the
-    top side. Saves the O(closure) dropDuplicates exchange per call (this
-    runs once per R4 round on the full-recompute path)."""
+    The star is closure.star_union's disjoint union — no O(closure)
+    dropDuplicates exchange per call (this runs once per R4 round on the
+    full-recompute path)."""
     tc = transitive_closure(
         sc,
         child="sub",
@@ -104,22 +108,39 @@ def _sc_star(sc: DataFrame, classes: DataFrame, cfg: RGConfig):
         max_iterations=cfg.max_iterations,
         broadcast_row_threshold=cfg.broadcast_row_threshold,
     )
-    refl = reflexive(classes, "c", "sub", "sup")
-    top = classes.where(F.col("c") != T.TOP).select(
-        F.col("c").alias("sub"), F.lit(T.TOP).cast("int").alias("sup")
-    )
-    self_pairs = tc.where(F.col("sub") == F.col("sup"))
-    top_pairs = tc.where((F.col("sup") == T.TOP) & (F.col("sub") != T.TOP))
-    star = (
-        tc.unionByName(
-            refl.join(F.broadcast(self_pairs), on=["sub", "sup"], how="left_anti")
+    star = star_union(tc, classes, "c", "sub", "sup", top=T.TOP)
+    return tc, star.localCheckpoint(eager=False)
+
+
+def property_star(sp: DataFrame, props: DataFrame, cfg: RGConfig) -> DataFrame:
+    """R2: reflexive-transitive property closure (sub, sup). The property
+    hierarchy is vocabulary-tiny, so a plain dedup is cheap here."""
+    return (
+        transitive_closure(
+            sp,
+            child="sub",
+            parent="sup",
+            max_iterations=cfg.max_iterations,
+            broadcast_row_threshold=cfg.broadcast_row_threshold,
         )
-        .unionByName(
-            top.join(F.broadcast(top_pairs), on=["sub", "sup"], how="left_anti")
-        )
+        .unionByName(reflexive(props, "p", "sub", "sup"))
+        .dropDuplicates()
         .localCheckpoint(eager=False)
     )
-    return tc, star
+
+
+def scan_max_token(sc_side: DataFrame, sp_side: DataFrame, some: DataFrame):
+    """Largest token of the closure sides and the told existentials, in one
+    aggregate job — decides token packing (_PACK_BITS)."""
+    return (
+        sc_side.select(F.greatest(F.max("sub"), F.max("sup")).alias("m"))
+        .unionByName(sp_side.select(F.greatest(F.max("sub"), F.max("sup")).alias("m")))
+        .unionByName(
+            some.select(F.greatest(F.max("s"), F.max("p"), F.max("f")).alias("m"))
+        )
+        .agg(F.max("m"))
+        .collect()[0][0]
+    )
 
 
 def derive_relations(
@@ -208,19 +229,7 @@ def derive_relations(
             if subject_star is None
             else (fill_plain if filler_star is None else sc_star)
         )
-        max_token = (
-            sc_scan.select(F.greatest(F.max("sub"), F.max("sup")).alias("m"))
-            .unionByName(
-                prop_plain.select(F.greatest(F.max("sub"), F.max("sup")).alias("m"))
-            )
-            .unionByName(
-                some.select(
-                    F.greatest(F.max("s"), F.max("p"), F.max("f")).alias("m")
-                )
-            )
-            .agg(F.max("m"))
-            .collect()[0][0]
-        )
+        max_token = scan_max_token(sc_scan, prop_plain, some)
     packable = max_token is not None and 0 <= max_token < (1 << _PACK_BITS)
 
     # x is any subclass (refl.) of the told subject
@@ -268,29 +277,133 @@ def derive_relations(
     return _distinct3(s3, "s", "p", "o", packable)
 
 
+def derive_star_delta(
+    sc_star: DataFrame,
+    some: DataFrame,
+    sp_star: DataFrame,
+    d_star: DataFrame,
+    broadcast_row_threshold: int,
+    **kw,
+) -> DataFrame:
+    """R3 rows that use >= 1 star pair of `d_star` (new pairs already unioned
+    into sc_star): one pass restricted to a new SUBJECT-closure pair, one
+    to a new FILLER-closure pair. The union may repeat rows; each caller
+    dedups per its own policy."""
+    return derive_relations(
+        sc_star, some, sp_star, broadcast_row_threshold, subject_star=d_star, **kw
+    ).unionByName(
+        derive_relations(
+            sc_star, some, sp_star, broadcast_row_threshold, filler_star=d_star, **kw
+        )
+    )
+
+
+def fire_definitions(rel_rows: DataFrame, defs: DataFrame) -> DataFrame:
+    """R4: x subClassOf F whenever x satisfies F's definition (p some y) —
+    the (sub, sup) facts `rel_rows` (s, p, o) fire against the definition
+    rows `defs` (f, p, o; callers pass them broadcast). The int casts pin
+    the token dtype so feedback-derived facts never widen the persisted
+    sc/sc_tc frames."""
+    return (
+        rel_rows.alias("r")
+        .join(
+            defs.alias("d"),
+            (F.col("r.p") == F.col("d.p")) & (F.col("r.o") == F.col("d.o")),
+        )
+        .select(
+            F.col("r.s").cast("int").alias("sub"),
+            F.col("d.f").cast("int").alias("sup"),
+        )
+        .where(F.col("sub") != F.col("sup"))
+        .dropDuplicates()
+    )
+
+
+def new_star_pairs(d_tc: DataFrame) -> DataFrame:
+    """The pairs a closure delta adds to sc_star: its self and TOP pairs
+    are already covered by the reflexive/top rows of their classes."""
+    return d_tc.where((F.col("sub") != F.col("sup")) & (F.col("sup") != T.TOP))
+
+
+def star_delta_stats(d_star: DataFrame) -> tuple[int, int]:
+    """(rows, owl:Nothing pairs) of a star delta in one job: the row count
+    feeds emptiness and running side-size decisions, the bottom count the
+    streaming engine's _has_bot stat."""
+    r = d_star.agg(
+        F.count(F.lit(1)).alias("n"),
+        F.sum(F.when(F.col("sup") == T.BOT, 1).otherwise(0)).alias("bot"),
+    ).collect()[0]
+    return r["n"], int(r["bot"] or 0)
+
+
+class FeedbackRound(NamedTuple):
+    sc: DataFrame  # subclass edges incl. the round's facts
+    sc_tc: DataFrame
+    d_tc: DataFrame  # closure pairs the round added
+    sc_star: DataFrame
+    d_star: DataFrame  # star pairs the round added (new_star_pairs(d_tc))
+    n_star: int
+    n_bot: int  # d_star rows whose sup is owl:Nothing
+    rel_d: DataFrame | None  # candidate rel rows; None when n_star == 0
+
+
+def feedback_round(
+    new_sc: DataFrame,
+    sc: DataFrame,
+    sc_tc: DataFrame,
+    sc_star: DataFrame,
+    some: DataFrame,
+    sp_star: DataFrame,
+    cfg: RGConfig,
+    dr_kw: dict,
+    old_tc_rows: int | None = None,
+    n_sides: int | None = None,
+) -> FeedbackRound:
+    """One incremental R4 round, shared by the batch (materialize_edges) and
+    streaming (incremental.apply_delta) feedback loops: fold the round's new
+    subclass facts into sc, extend the closure with closure.incremental_tc,
+    extend sc_star by the delta's star pairs and derive the relation rows
+    that use one of them (derive_star_delta).
+
+    Classes are fixed during feedback, so d_star is disjoint from sc_star —
+    plain union, no O(closure) dedup. When d_star is empty the facts were
+    already entailed, no new rel row can arise, and rel_d is None.
+
+    old_tc_rows: a row count or upper bound of sc_tc, enabling
+    incremental_tc's driver path and count-free broadcast decision.
+    n_sides: the caller's running row count of the derive sides before this
+    round; when given, the passes decide their broadcast from it (plus
+    n_star) instead of per-side count jobs."""
+    thr = cfg.broadcast_row_threshold
+    sc = sc.unionByName(new_sc)
+    sc_tc, d_tc = incremental_tc(
+        sc_tc,
+        new_sc,
+        max_iterations=cfg.max_iterations,
+        broadcast_row_threshold=thr,
+        old_tc_rows=old_tc_rows,
+    )
+    d_star = new_star_pairs(d_tc).localCheckpoint(eager=False)
+    n_star, n_bot = star_delta_stats(d_star)
+    if n_star == 0:
+        return FeedbackRound(sc, sc_tc, d_tc, sc_star, d_star, 0, n_bot, None)
+    sc_star = sc_star.unionByName(d_star).localCheckpoint(eager=False)
+    if n_sides is not None:
+        dr_kw = {**dr_kw, "sides_broadcast": thr > 0 and n_sides + n_star <= thr}
+    rel_d = derive_star_delta(sc_star, some, sp_star, d_star, thr, **dr_kw)
+    return FeedbackRound(sc, sc_tc, d_tc, sc_star, d_star, n_star, n_bot, rel_d)
+
+
 def materialize_edges(told: dict[str, DataFrame], cfg: RGConfig) -> dict[str, DataFrame]:
     """Run the R1-R4 fixpoint; return {'rel','sc_closure','sc_star','unsat',
     'classes','assertions'} frames (pre-output-config, already TOP/BOT-free
     where noted)."""
-    from relation_graph_spark.closure import ensure_iteration_confs
-
     ensure_iteration_confs(told["classes"])
     classes = told["classes"].localCheckpoint(eager=False)
     props = told["props"]
 
     # R2 once: property closure is independent of the class feedback loop.
-    sp_star = (
-        transitive_closure(
-            told["sp"],
-            child="sub",
-            parent="sup",
-            max_iterations=cfg.max_iterations,
-            broadcast_row_threshold=cfg.broadcast_row_threshold,
-        )
-        .unionByName(reflexive(props, "p", "sub", "sup"))
-        .dropDuplicates()
-        .localCheckpoint(eager=False)
-    )
+    sp_star = property_star(told["sp"], props, cfg)
 
     some = told["some"].dropDuplicates().localCheckpoint(eager=False)
     def_some = told["def_some"].dropDuplicates().localCheckpoint(eager=False)
@@ -330,7 +443,7 @@ def materialize_edges(told: dict[str, DataFrame], cfg: RGConfig) -> dict[str, Da
     )
 
     thr = cfg.broadcast_row_threshold
-    staged = n_some > cfg.incremental_feedback_threshold
+    staged = n_some > _INCREMENTAL_FEEDBACK_THRESHOLD
     dr_kw = {"staged": staged, "max_token": max_token}
     # round 0: full class closure + full R3
     sc_tc, sc_star = _sc_star(sc, classes, cfg)
@@ -340,65 +453,35 @@ def materialize_edges(told: dict[str, DataFrame], cfg: RGConfig) -> dict[str, Da
 
     if has_feedback:
         # R4 feedback rounds are INCREMENTAL: each round extends the closure
-        # with just the newly derived subclass facts (closure.incremental_tc)
-        # and re-derives only the relation rows that involve a new closure
-        # pair (delta-restricted R3, same discipline as the streaming
-        # engine) — per-round work is proportional to the round's delta, not
-        # a full recompute of the most expensive stage. Below the
-        # cost-crossover (tiny told tables, where per-job fixed cost
-        # dominates) rounds fall back to the plain full recompute.
-        from relation_graph_spark.closure import incremental_tc
-
-        incremental_rounds = n_some > cfg.incremental_feedback_threshold
-
-        def _r4_new_sc(rel_df, sc_df):
-            # x subClassOf F whenever x satisfies F's definition (p some y)
-            return (
-                rel_df.alias("r")
-                .join(
-                    F.broadcast(def_some).alias("d"),
-                    (F.col("r.p") == F.col("d.p")) & (F.col("r.o") == F.col("d.o")),
-                )
-                .select(F.col("r.s").alias("sub"), F.col("d.f").alias("sup"))
-                .where(F.col("sub") != F.col("sup"))
-                .dropDuplicates()
-                .join(sc_df, on=["sub", "sup"], how="left_anti")
-                .localCheckpoint(eager=False)
-            )
-
+        # with just the newly derived subclass facts and re-derives only the
+        # relation rows that involve a new closure pair (feedback_round, the
+        # same step the streaming engine runs) — per-round work is
+        # proportional to the round's delta, not a full recompute of the
+        # most expensive stage. Below the cost crossover (tiny told tables,
+        # where per-job fixed cost dominates) rounds fall back to the plain
+        # full recompute.
+        defs = F.broadcast(def_some)
         rel_dirty = False  # rel may carry duplicates across round deltas
         for _round in range(cfg.max_iterations):
-            new_sc = _r4_new_sc(rel, sc)
+            new_sc = (
+                fire_definitions(rel, defs)
+                .join(sc, on=["sub", "sup"], how="left_anti")
+                .localCheckpoint(eager=False)
+            )
             if new_sc.isEmpty():
                 break
-            sc = sc.unionByName(new_sc).localCheckpoint(eager=False)
-            if not incremental_rounds:
+            if not staged:  # below the crossover: full recompute
+                sc = sc.unionByName(new_sc).localCheckpoint(eager=False)
                 sc_tc, sc_star = _sc_star(sc, classes, cfg)
                 rel = derive_relations(
                     sc_star, some, sp_star, thr, **dr_kw
                 ).localCheckpoint(eager=False)
                 continue
-            sc_tc, d_tc = incremental_tc(
-                sc_tc, new_sc, max_iterations=cfg.max_iterations,
-                broadcast_row_threshold=thr,
-            )
-            # classes are fixed during feedback, so the closure delta minus
-            # its self/TOP pairs (already present as reflexive/top rows) is
-            # disjoint from sc_star — plain union, no O(closure) dedup
-            d_star = d_tc.where(
-                (F.col("sub") != F.col("sup")) & (F.col("sup") != T.TOP)
-            ).localCheckpoint(eager=False)
-            if d_star.isEmpty():
-                continue  # told edge was already entailed; rel unchanged
-            sc_star = sc_star.unionByName(d_star).localCheckpoint(eager=False)
-            rel_d = derive_relations(
-                sc_star, some, sp_star, thr, subject_star=d_star, **dr_kw
-            ).unionByName(
-                derive_relations(
-                    sc_star, some, sp_star, thr, filler_star=d_star, **dr_kw
-                )
-            )
-            rel = rel.unionByName(rel_d.dropDuplicates()).localCheckpoint(eager=False)
+            r = feedback_round(new_sc, sc, sc_tc, sc_star, some, sp_star, cfg, dr_kw)
+            sc, sc_tc, sc_star = r.sc, r.sc_tc, r.sc_star
+            if r.rel_d is None:
+                break  # facts were already entailed; rel unchanged
+            rel = rel.unionByName(r.rel_d.dropDuplicates()).localCheckpoint(eager=False)
             rel_dirty = True
         else:
             raise FixpointDidNotConverge(
@@ -507,6 +590,150 @@ def materialize(seq_df: DataFrame, cfg: RGConfig | None = None) -> DataFrame:
     return assemble_output(m, cfg)
 
 
+# ------------------------------------------------------------ output rows
+#
+# One builder per output row family. assemble_output applies them to the
+# full fixpoint frames; incremental.assemble_delta applies them to a batch's
+# deltas and to its retraction inputs. Every builder returns (s, p, o) int
+# rows.
+
+
+def _spo(df: DataFrame, s: str, p_tok: int, o: str) -> DataFrame:
+    return df.select(
+        F.col(s).cast("int").alias("s"),
+        F.lit(p_tok).cast("int").alias("p"),
+        F.col(o).cast("int").alias("o"),
+    )
+
+
+def _match_class(df: DataFrame, col: str, classes: DataFrame, how: str) -> DataFrame:
+    """Broadcast semi/anti join of df's `col` against a class set (column c,
+    vocabulary-sized: the unsat set or its delta)."""
+    gate = F.broadcast(classes.select(F.col("c").alias("_gate_c")))
+    return df.join(gate, F.col(col) == F.col("_gate_c"), how)
+
+
+def _prop_filter(df: DataFrame, cfg: RGConfig) -> DataFrame:
+    if cfg.properties is None:
+        return df
+    return df.where(
+        F.col("p").isin(*[int(t) for t in cfg.properties])
+        if cfg.properties
+        else F.lit(False)
+    )
+
+
+def existential_rows(
+    rel: DataFrame, cfg: RGConfig, unsat: DataFrame | None = None
+) -> DataFrame:
+    """(S, p, D) rows of rel: builtin tokens dropped, cfg.properties applied
+    and, when `unsat` is given, rows whose OBJECT is unsatisfiable
+    suppressed (see assemble_output)."""
+    out = rel.where(_not_builtin("s") & _not_builtin("o") & _not_builtin("p"))
+    if unsat is not None:
+        out = _match_class(out, "o", unsat, "left_anti")
+    out = _prop_filter(out, cfg)
+    return out.select(
+        F.col("s").cast("int").alias("s"),
+        F.col("p").cast("int").alias("p"),
+        F.col("o").cast("int").alias("o"),
+    )
+
+
+def individual_rows(assertions: DataFrame, rows: DataFrame) -> DataFrame:
+    """ind : C and C subClassOf (p some O)  =>  ind p O, over existential
+    output rows (processRestriction instances, RelationGraph.scala:147-153).
+    One row per derivation — may repeat."""
+    return (
+        assertions.alias("a")
+        .join(rows.alias("r"), F.col("a.c") == F.col("r.s"))
+        .select(
+            F.col("a.ind").cast("int").alias("s"),
+            F.col("r.p").cast("int").alias("p"),
+            F.col("r.o").cast("int").alias("o"),
+        )
+    )
+
+
+def taxonomy_pairs(sc_tc: DataFrame, unsat: DataFrame | None = None) -> DataFrame:
+    """Closure pairs that can become taxonomy rows: named, non-reflexive,
+    and — when `unsat` is given — with a satisfiable sup."""
+    out = sc_tc.where(
+        _not_builtin("sub") & _not_builtin("sup") & (F.col("sub") != F.col("sup"))
+    )
+    if unsat is not None:
+        out = _match_class(out, "sup", unsat, "left_anti")
+    return out
+
+
+def cycle_pairs(sc_tc: DataFrame) -> DataFrame:
+    """taxonomy_pairs of the closure restricted to CYCLE nodes. Mutual pairs
+    (a ⊑* b and b ⊑* a) only exist between nodes on a subclass cycle, and a
+    node is on a cycle iff the (non-reflexive) transitive closure contains
+    its self-pair. Restricting to those vocabulary-rare nodes first makes
+    every mutuality check a broadcast semi-join against this tiny frame,
+    instead of an O(closure)-shuffle self-join of the taxonomy."""
+    cyc = F.broadcast(
+        sc_tc.where(F.col("sub") == F.col("sup"))
+        .select(F.col("sub").alias("cyc_c"))
+        .dropDuplicates()
+    )
+    return (
+        taxonomy_pairs(sc_tc)
+        .join(cyc, F.col("sub") == F.col("cyc_c"), "left_semi")
+        .join(cyc, F.col("sup") == F.col("cyc_c"), "left_semi")
+        .localCheckpoint(eager=False)
+    )
+
+
+def taxonomy_rows(pairs: DataFrame, cyc: DataFrame | None) -> DataFrame:
+    """(S, subClassOf, O) rows of `pairs`; with `cyc` (cycle_pairs, i.e.
+    equivalence_as_subclass=False) a pair whose reverse is in `cyc` is
+    mutual and becomes an (S, owl:equivalentClass, O) row instead. The
+    reverse of a mutual pair is emitted from its own pair, so both
+    directions appear."""
+    if cyc is None:
+        return _spo(pairs, "sub", T.SUBCLASSOF, "sup")
+    rev = F.broadcast(cyc.select(F.col("sup").alias("sub"), F.col("sub").alias("sup")))
+    mutual = pairs.join(rev, on=["sub", "sup"], how="left_semi")
+    plain = pairs.join(rev, on=["sub", "sup"], how="left_anti")
+    return _spo(plain, "sub", T.SUBCLASSOF, "sup").unionByName(
+        _spo(mutual, "sub", T.EQUIVALENTCLASS, "sup")
+    )
+
+
+def reflexive_rows(
+    classes: DataFrame, cfg: RGConfig, unsat: DataFrame | None = None
+) -> DataFrame:
+    """Reflexive rows follow equivalenceAsSubclass: C subClassOf C when true,
+    C owl:equivalentClass C when false (adjustedEquivs includes the concept
+    itself, RelationGraph.scala:217-225). Named classes only; unsat classes
+    suppressed when `unsat` is given."""
+    pred = T.SUBCLASSOF if cfg.equivalence_as_subclass else T.EQUIVALENTCLASS
+    out = classes.where(_not_builtin("c"))
+    if unsat is not None:
+        out = _match_class(out, "c", unsat, "left_anti")
+    return _spo(out, "c", pred, "c")
+
+
+def type_rows(assertions: DataFrame, pairs: DataFrame) -> DataFrame:
+    """ind : C and C subClassOf* O  =>  ind rdf:type O over star pairs
+    (reference processSubclasses individualsTriples,
+    RelationGraph.scala:206-210). NOT gated on O's satisfiability — the
+    reference computes these before its unsat check. One row per
+    derivation — may repeat."""
+    return (
+        assertions.alias("a")
+        .join(pairs.alias("h"), F.col("a.c") == F.col("h.sub"))
+        .where(_not_builtin("h.sup"))
+        .select(
+            F.col("a.ind").cast("int").alias("s"),
+            F.lit(T.RDF_TYPE).cast("int").alias("p"),
+            F.col("h.sup").cast("int").alias("o"),
+        )
+    )
+
+
 def assemble_output(
     m: dict[str, DataFrame], cfg: RGConfig, with_kind: bool = False
 ) -> DataFrame:
@@ -525,149 +752,31 @@ def assemble_output(
     OWL-mode sink can reify individual-subject edges via rdf:type
     (owlTriples(..., RDFType), reference RelationGraph.scala:149-153).
     """
-    unsat = F.broadcast(m["unsat"])
-
-    def _object_sat(df: DataFrame, obj_col: str) -> DataFrame:
-        return df.join(unsat, df[obj_col] == unsat["c"], "left_anti")
-
-    rel = _object_sat(
-        m["rel"].where(_not_builtin("s") & _not_builtin("o") & _not_builtin("p")), "o"
-    )
-
-    def _prop_filter(df: DataFrame) -> DataFrame:
-        if cfg.properties is None:
-            return df
-        return df.where(
-            F.col("p").isin(*[int(t) for t in cfg.properties])
-            if cfg.properties
-            else F.lit(False)
-        )
-
-    rel = _prop_filter(rel)
+    unsat = m["unsat"]
+    rel = existential_rows(m["rel"], cfg, unsat)
     out = rel if cfg.output_classes else rel.where(F.lit(False))
     out = out.withColumn("kind", F.lit("class"))
 
     if cfg.output_individuals:
-        # ind : C and C subClassOf (p some O)  =>  ind p O
-        # (processRestriction instances, RelationGraph.scala:147-153)
-        ind = (
-            m["assertions"]
-            .alias("a")
-            .join(rel.alias("r"), F.col("a.c") == F.col("r.s"))
-            .select(
-                F.col("a.ind").alias("s"),
-                F.col("r.p").alias("p"),
-                F.col("r.o").alias("o"),
-            )
-            .dropDuplicates()
-            .withColumn("kind", F.lit("individual"))
-        )
-        out = out.unionByName(ind).dropDuplicates()
+        ind = individual_rows(m["assertions"], rel).dropDuplicates()
+        out = out.unionByName(ind.withColumn("kind", F.lit("individual"))).dropDuplicates()
 
     if cfg.output_subclasses:
-        scc = m["sc_closure"].where(
-            _not_builtin("sub") & _not_builtin("sup") & (F.col("sub") != F.col("sup"))
-        )
-        scc = _object_sat(scc, "sup")
-        if cfg.equivalence_as_subclass:
-            # mutual pairs stay as two reciprocal subClassOf rows
-            sub_rows = scc.select(
-                F.col("sub").alias("s"),
-                F.lit(T.SUBCLASSOF).cast("int").alias("p"),
-                F.col("sup").alias("o"),
-            )
-            eq_rows = sub_rows.where(F.lit(False))
-        else:
-            # mutual pairs (a ⊑* b and b ⊑* a) only exist between nodes on a
-            # subclass cycle, and a node is on a cycle iff the (non-reflexive)
-            # transitive closure contains its self-pair. Restricting to those
-            # vocabulary-rare cycle nodes first makes the mutuality check a
-            # broadcast semi-join + a tiny self-join, instead of an
-            # O(closure)-shuffle self-join of the whole taxonomy.
-            cyc = F.broadcast(
-                m["sc_closure"]
-                .where(F.col("sub") == F.col("sup"))
-                .select(F.col("sub").alias("cyc_c"))
-                .dropDuplicates()
-            )
-            scc_cyc = (
-                scc.join(cyc, scc["sub"] == cyc["cyc_c"], "left_semi")
-                .join(cyc, F.col("sup") == cyc["cyc_c"], "left_semi")
-                .localCheckpoint(eager=False)
-            )
-            mutual = scc_cyc.alias("a").join(
-                scc_cyc.alias("b"),
-                (F.col("a.sub") == F.col("b.sup")) & (F.col("a.sup") == F.col("b.sub")),
-                "left_semi",
-            )
-            sub_rows = scc.join(
-                F.broadcast(mutual), on=["sub", "sup"], how="left_anti"
-            ).select(
-                F.col("sub").alias("s"),
-                F.lit(T.SUBCLASSOF).cast("int").alias("p"),
-                F.col("sup").alias("o"),
-            )
-            eq_rows = mutual.select(
-                F.col("sub").alias("s"),
-                F.lit(T.EQUIVALENTCLASS).cast("int").alias("p"),
-                F.col("sup").alias("o"),
-            )
-        out = out.unionByName(sub_rows.withColumn("kind", F.lit("class"))).unionByName(
-            eq_rows.withColumn("kind", F.lit("class"))
-        )
+        cyc = None if cfg.equivalence_as_subclass else cycle_pairs(m["sc_closure"])
+        taxo = taxonomy_rows(taxonomy_pairs(m["sc_closure"], unsat), cyc)
         if cfg.reflexive_subclasses:
-            # reflexive rows follow equivalenceAsSubclass: C subClassOf C
-            # when true, C owl:equivalentClass C when false (adjustedEquivs
-            # includes the concept itself, RelationGraph.scala:217-225)
-            refl_pred = (
-                T.SUBCLASSOF if cfg.equivalence_as_subclass else T.EQUIVALENTCLASS
-            )
-            refl = (
-                m["classes"]
-                .where(_not_builtin("c"))
-                .join(
-                    unsat.withColumnRenamed("c", "_unsat_c"),
-                    F.col("c") == F.col("_unsat_c"),
-                    "left_anti",
-                )
-                .select(
-                    F.col("c").alias("s"),
-                    F.lit(refl_pred).cast("int").alias("p"),
-                    F.col("c").alias("o"),
-                    F.lit("class").alias("kind"),
-                )
-            )
-            out = out.unionByName(refl)
+            taxo = taxo.unionByName(reflexive_rows(m["classes"], cfg, unsat))
+        out = out.unionByName(taxo.withColumn("kind", F.lit("class")))
         if cfg.output_individuals:
-            # ind : C and C subClassOf* O  =>  ind rdf:type O (reference
-            # processSubclasses individualsTriples, RelationGraph.scala:206-210;
-            # NOT gated on O's satisfiability — the reference computes these
-            # before its unsat check)
-            ityped = (
-                m["assertions"]
-                .alias("a")
-                .join(m["sc_star"].alias("h"), F.col("a.c") == F.col("h.sub"))
-                .select(
-                    F.col("a.ind").alias("s"),
-                    F.lit(T.RDF_TYPE).cast("int").alias("p"),
-                    F.col("h.sup").alias("o"),
-                )
-                .where(_not_builtin("o"))
-                .dropDuplicates()
-                .withColumn("kind", F.lit("individual"))
-            )
-            out = out.unionByName(ityped)
+            ityped = type_rows(m["assertions"], m["sc_star"]).dropDuplicates()
+            out = out.unionByName(ityped.withColumn("kind", F.lit("individual")))
 
     # no global dropDuplicates: every unioned component is internally
     # distinct, and the components are pairwise disjoint (existential rows
     # carry property tokens >= FIRST_ENTITY_TOKEN; taxonomy/type rows carry
     # the reserved SUBCLASSOF/EQUIVALENTCLASS/RDF_TYPE predicates; reflexive
     # rows have s == o while sc_closure rows were filtered to s != o).
-    cols = [
-        F.col("s").cast("int").alias("s"),
-        F.col("p").cast("int").alias("p"),
-        F.col("o").cast("int").alias("o"),
-    ]
+    cols = [F.col("s"), F.col("p"), F.col("o")]
     if with_kind:
         cols.append(F.col("kind"))
     return out.select(*cols)

@@ -190,17 +190,6 @@ class IncrementalClosureJob:
         if self.sink.is_committed(int(batch_id)):
             return  # replayed micro-batch: already fully applied
 
-        import time as _time
-
-        _phase_timing = bool(os.environ.get("RGS_PHASE_TIMING"))
-        _t = [_time.time()]
-
-        def _mark(label: str) -> None:
-            if _phase_timing:
-                now = _time.time()
-                print(f"[phase b{batch_id}] {label}: {now - _t[0]:.2f}s")
-                _t[0] = now
-
         batch_df = batch_df.localCheckpoint()
 
         # ONE batch-sized aggregation covers the watermark (max event ts),
@@ -256,12 +245,10 @@ class IncrementalClosureJob:
             decode_axioms(batch_seq.select("doc_id", "tokens", "n_tok", "source"))
         )
         self._ensure_state_loaded()
-        _mark("watermark+told+decode")
         if self._state is None:
             state, deltas = initial_state(delta_told, self.cfg), None
         else:
             state, deltas = apply_delta(self._state, delta_told, self.cfg)
-        _mark("apply_delta")
         deltas_for_emit = deltas
 
         prev_m = self._prev_manifest()
@@ -328,7 +315,6 @@ class IncrementalClosureJob:
         # alternative, chaining checkpointed Datasets across batches, is an
         # exponential planning-time cliff past ~15 batches)
         repoint_state(self.spark, state, frame_paths)
-        _mark("persist_state")
 
         if deltas_for_emit is not None and self._prev_unsat is not None:
             # -------- fast path: delta-sized emission -----------------------
@@ -358,7 +344,6 @@ class IncrementalClosureJob:
                 _fn, _ft = _pool.submit(hashed.count), _pool.submit(tomb.count)
                 n_new_rows, n_tomb_rows = _fn.result(), _ft.result()
             total = prev_total + n_new_rows - n_tomb_rows
-            _mark("delta_counts")
             self.sink.append(
                 hashed.select("s", "p", "o", "edge", "edge_hash"),
                 int(batch_id),
@@ -400,7 +385,6 @@ class IncrementalClosureJob:
                 n_rows_hint=n_edges if committed is None else None,
             )
 
-        _mark("sink_append")
         # post-commit maintenance: expire state dirs superseded by a
         # now-committed snapshot; run the sink's INLINE compaction tier
         # (bounded minor fold only — size-tiered merges rewrite up to
@@ -423,7 +407,6 @@ class IncrementalClosureJob:
             self.told_trail.fold_through(int(batch_id))
         if hasattr(self.sink, "maybe_compact"):
             self.sink.maybe_compact()
-        _mark("maintenance")
         self._state = state
         self._state_batch = int(batch_id)
         if deltas_for_emit is not None and unsat_new is not None:

@@ -46,13 +46,29 @@ def test_mutual_pairs_via_cycle_nodes_no_closure_self_join(spark):
     assert got == eq | sub
 
 
-def test_deep_feedback_chain_incremental_rounds(spark):
+def _feedback_chain(spark, monkeypatch, crossover):
     """An equivalence-definition chain forcing k=4 R4 feedback rounds
-    (A subClassOf E1 unlocks E1's told existential, which entails E2, ...):
-    the incremental feedback loop (incremental_tc + delta-restricted R3 per
-    round) must reach the same fixpoint as the naive full recompute."""
+    (A subClassOf E1 unlocks E1's told existential, which entails E2, ...),
+    run with the told-existential crossover set to `crossover` — the chain
+    has 8 told existentials, so 0 takes the incremental R4 rounds and the
+    default takes the full-recompute rounds. Returns the number of
+    closure.incremental_tc calls."""
+    import importlib
+
     from pyoracle import materialize_py
 
+    # the package attribute `materialize` is the function, not the module
+    M = importlib.import_module("relation_graph_spark.materialize")
+
+    calls = []
+    real_itc = M.incremental_tc
+
+    def counting_itc(*args, **kwargs):
+        calls.append(1)
+        return real_itc(*args, **kwargs)
+
+    monkeypatch.setattr(M, "incremental_tc", counting_itc)
+    monkeypatch.setattr(M, "_INCREMENTAL_FEEDBACK_THRESHOLD", crossover)
     A, p = 11, 21
     D = [31, 32, 33, 34]
     E = [41, 42, 43, 44]
@@ -66,6 +82,24 @@ def test_deep_feedback_chain_incremental_rounds(spark):
     for e in E:
         assert (A, T.SUBCLASSOF, e) in got
     assert (E[0], T.SUBCLASSOF, E[3]) in got
+    return len(calls)
+
+
+def test_deep_feedback_chain_incremental_rounds(spark, monkeypatch):
+    """The incremental feedback loop (incremental_tc + delta-restricted R3
+    per round) reaches the same fixpoint as the naive full recompute."""
+    assert _feedback_chain(spark, monkeypatch, crossover=0) > 0
+
+
+def test_deep_feedback_chain_recompute_rounds(spark, monkeypatch):
+    """At or below the crossover every round recomputes the closure and R3
+    in full — no incremental_tc call."""
+    from relation_graph_spark.materialize import _INCREMENTAL_FEEDBACK_THRESHOLD
+
+    n_itc = _feedback_chain(
+        spark, monkeypatch, crossover=_INCREMENTAL_FEEDBACK_THRESHOLD
+    )
+    assert n_itc == 0
 
 
 def test_negative_assertion_f_p_c_not_entailed(spark):

@@ -121,16 +121,14 @@ def test_idempotent_sink_replay_and_orphan(spark, tmp_path):
 
 
 # ------------------------------------------------------------------ closure
-def test_closure_modes_agree_on_cycle(spark):
+def test_closure_on_cycle(spark):
     from relation_graph_spark.closure import transitive_closure
 
     edges = spark.createDataFrame(
         [(1, 2), (2, 3), (3, 1), (3, 4)], "child: bigint, parent: bigint"
     )
-    smart = {tuple(r) for r in transitive_closure(edges, mode="smart").collect()}
-    linear = {tuple(r) for r in transitive_closure(edges, mode="linear").collect()}
-    assert smart == linear
-    assert (1, 1) in smart and (1, 4) in smart and len(smart) == 12
+    tc = {tuple(r) for r in transitive_closure(edges).collect()}
+    assert (1, 1) in tc and (1, 4) in tc and len(tc) == 12
 
 
 def test_closure_long_chain_smart_rounds(spark):
@@ -548,3 +546,32 @@ def test_frame_sample_offsets_and_bytes(spark):
     assert got == {
         (0, 1, ord("a")), (1, 3, ord("c")), (2, 5, ord("e")), (3, 7, ord("g"))
     }
+
+
+# ------------------------------------------------------------ trace points
+def test_perfbench_trace_targets_resolve(monkeypatch):
+    """Every (module, attribute) the benchmark's outside-in tracer wraps
+    must exist: a renamed engine function would otherwise silently drop its
+    spans from `perfbench/run.py --trace 1`."""
+    import importlib
+    import importlib.util
+    import inspect
+    import sys
+    from pathlib import Path
+
+    path = Path(__file__).resolve().parents[1] / "perfbench" / "spans.py"
+    spec = importlib.util.spec_from_file_location("_perfbench_spans", path)
+    spans = importlib.util.module_from_spec(spec)
+    # registered first: its dataclasses resolve their module by name
+    monkeypatch.setitem(sys.modules, spec.name, spans)
+    spec.loader.exec_module(spans)
+    assert spans.TARGETS
+    for _layer, modname, attr in spans.TARGETS:
+        owner = importlib.import_module(modname)
+        if "." in attr:
+            cls_name, attr = attr.split(".")
+            owner = getattr(owner, cls_name)
+            assert inspect.isclass(owner), (modname, cls_name)
+            assert inspect.isfunction(getattr(owner, attr, None)), (modname, cls_name, attr)
+        else:
+            assert callable(getattr(owner, attr, None)), (modname, attr)
